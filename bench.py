@@ -285,18 +285,27 @@ def main():
                       shuffle_partitions=max(16, args.cpus))
 
     times: dict[str, float] = {}
-    extras: dict[str, float] = {}
+    extras: dict[str, object] = {}
     run_headline(spark, n_pages, n_regions, times, extras, repeat=args.repeat)
 
     # ---- oracle-checked battery on driver tables --------------------------
+    # A failed query is never dropped: it is left out of `times` (so it
+    # cannot shrink the total), reported in extras["failed_queries"], and
+    # makes the run exit non-zero.
+    failures: dict[str, str] = {}
     if not args.skip_battery:
         from shapely_spark.queries import QUERIES
 
-        def timed(name, fn):
+        def attempt(phase, name, sf_dir):
+            """Seconds for one run of a battery query; None if it failed."""
             t0 = time.time()
-            out = fn()
-            times[name] = round(time.time() - t0, 3)
-            return out
+            try:
+                QUERIES[name](spark, sf_dir).count()
+            except Exception as ex:
+                failures.setdefault(
+                    name, f"{phase}: {type(ex).__name__}: {ex}"[:200])
+                return None
+            return round(time.time() - t0, 3)
 
         # steady-state methodology (see BENCH/BASELINE.md): warm each plan
         # shape once at sf0.01 — sf0.001 proved too small to push the big
@@ -310,34 +319,28 @@ def main():
                          os.path.join(base, "sf0.001"))
              if os.path.isdir(d) and d != args.sf_dir), None)
         if warm_dir:
-            for name, fn in QUERIES.items():
-                try:
-                    fn(spark, warm_dir).count()
-                except Exception:
-                    pass
+            for name in QUERIES:
+                attempt("warmup", name, warm_dir)
 
-        for name, fn in QUERIES.items():
-            try:
-                timed(name, lambda fn=fn: fn(spark, args.sf_dir).count())
-            except Exception as ex:  # keep the bench alive
-                times[name] = -1.0
-                extras[f"{name}_error"] = str(ex)[:100]
+        for name in QUERIES:
+            t = attempt("timed", name, args.sf_dir)
+            if t is not None:
+                times[name] = t
         # second pass over the slowest entries, keep the min: the biggest
         # generated methods sometimes finish C2 compilation only DURING
         # their first at-scale run (minhash measured 22-37 s first pass vs
         # 7-8 s steady-state even after the sf0.01 warmup), and a single
         # sample is also where host-steal spikes land
-        slowest = sorted((n for n in QUERIES if times.get(n, -1) > 0),
+        slowest = sorted((n for n in QUERIES if n in times),
                          key=lambda n: -times[n])[:5]
         for name in slowest:
-            t0 = time.time()
-            try:
-                QUERIES[name](spark, args.sf_dir).count()
-                times[name] = min(times[name], round(time.time() - t0, 3))
-            except Exception:
-                pass
+            t = attempt("second pass", name, args.sf_dir)
+            if t is not None:
+                times[name] = min(times[name], t)
+        if failures:
+            extras["failed_queries"] = failures
 
-    total = round(sum(v for v in times.values() if v > 0), 3)
+    total = round(sum(times.values()), 3)
     payload = {
         "metric": "spatial-join+tiling engine wall time (headline paths + battery)",
         "value": total,
@@ -370,12 +373,14 @@ def main():
         payload["queries"] = {
             **headline, **slowest,
             "battery_n": len(battery),
-            "battery_total_sec": round(sum(v for v in battery.values() if v > 0), 2),
+            "battery_total_sec": round(sum(battery.values()), 2),
         }
         payload["queries_full"] = "BENCH/BENCH_FULL_LATEST.json"
         line = json.dumps(payload)
     print(line)
     spark.stop()
+    if failures:
+        sys.exit(f"{len(failures)} battery queries failed: {sorted(failures)}")
 
 
 if __name__ == "__main__":

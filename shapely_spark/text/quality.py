@@ -343,6 +343,17 @@ def stratified_sample(
             .drop("__k", "__s", "__r"))
 
 
+def _lm_total(lm: DataFrame, toks) -> float:
+    """Token count of the LM corpus (one driver collect); an empty or
+    all-NULL corpus has no probabilities to estimate."""
+    total = lm.select(F.sum(F.size(toks)).cast("long").alias("t")) \
+        .collect()[0]["t"]
+    if not total:
+        raise ValueError("LM corpus has no tokens: lm_corpus (or docs, "
+                         "when self-scored) is empty or all NULL")
+    return float(total)
+
+
 def unigram_logprob(
     docs: DataFrame,
     lm_corpus: DataFrame | None = None,
@@ -375,12 +386,11 @@ def unigram_logprob(
              .groupBy("word").agg(F.count("*").cast("long").alias("cnt")))
     if min_count > 1:
         vocab = vocab.where(F.col("cnt") >= min_count)
-    total = lm.select(F.sum(F.size(F.split(F.col(text_col), " ")))
-                      .cast("long").alias("t")).collect()[0]["t"]
+    total = _lm_total(lm, F.split(F.col(text_col), " "))
     # identical op order to the SQL oracle: ln(cnt / total)
-    vocab = vocab.select("word", F.log(F.col("cnt") / F.lit(float(total)))
+    vocab = vocab.select("word", F.log(F.col("cnt") / F.lit(total))
                          .alias("logp"))
-    floor = F.lit(math.log(0.5 / float(total)))
+    floor = F.lit(math.log(0.5 / total))
     scored = (docs.select(F.col(id_col), F.explode(toks).alias("word"))
               .join(F.broadcast(vocab), "word", "left")
               .groupBy(id_col)
@@ -431,11 +441,10 @@ def bigram_logprob(
              .groupBy("word").agg(F.count("*").cast("long").alias("cnt")))
     if min_count > 1:
         vocab = vocab.where(F.col("cnt") >= min_count)
-    total = lm.select(F.sum(F.size(lm_toks)).cast("long").alias("t")) \
-        .collect()[0]["t"]
+    total = _lm_total(lm, lm_toks)
     uni = vocab.select(
         "word", F.col("cnt").alias("w_cnt"),
-        F.log(F.col("cnt") / F.lit(float(total))).alias("w_logp"))
+        F.log(F.col("cnt") / F.lit(total)).alias("w_logp"))
 
     lm_t = lm.select(lm_toks.alias("__toks"))
     pair = F.zip_with(
@@ -466,7 +475,7 @@ def bigram_logprob(
                                        F.col("w").alias("__w"),
                                        "pw_cnt")),
                 ["__p", "__w"], "left"))
-    floor = F.lit(math.log(0.5 / float(total)))
+    floor = F.lit(math.log(0.5 / total))
     uni_score = F.coalesce(F.col("w_logp"), floor)
     logp = (
         # no left context (document start): plain unigram, no α penalty —
@@ -522,20 +531,22 @@ def ngram_logprob(
     lm_toks = F.split(F.col(text_col), " ")
 
     def kgram_keys(toks, k):
-        """array of k-gram key strings (size - k + 1 entries): zip_with
-        chain over k shifted slices, separator-joined."""
+        """array of k-gram key strings (max(size - k + 1, 0) entries):
+        zip_with chain over k shifted slices, separator-joined."""
         if k == 1:
             return toks
-        acc = F.slice(toks, 1, F.size(toks) - (k - 1))
+        # a document shorter than k tokens has no k-grams (slice rejects
+        # a negative length)
+        n = F.greatest(F.size(toks) - (k - 1), F.lit(0))
+        acc = F.slice(toks, 1, n)
         for j in range(1, k):
-            nxt = F.slice(toks, 1 + j, F.size(toks) - (k - 1))
+            nxt = F.slice(toks, 1 + j, n)
             acc = F.zip_with(
                 acc, nxt,
                 lambda a, b: F.concat(a, F.lit(_NGRAM_SEP), b))
         return acc
 
-    total = lm.select(F.sum(F.size(lm_toks)).cast("long").alias("t")) \
-        .collect()[0]["t"]
+    total = _lm_total(lm, lm_toks)
     lm_t = lm.select(lm_toks.alias("__toks"))
     rels = {}
     for k in range(1, order + 1):
@@ -558,17 +569,20 @@ def ngram_logprob(
 
     def pad(arr, k):
         """align the k-gram key array to positions: NULL for the first
-        k-1 positions."""
+        k-1 positions, and exactly one entry per token even when the
+        document is shorter than k-1 tokens."""
         if k == 1:
             return arr
-        return F.concat(F.array_repeat(null_s, k - 1), arr)
+        lead = F.least(F.size(toks), F.lit(k - 1))
+        return F.concat(F.array_repeat(null_s, lead), arr)
 
     fields = [pad(keys[1], 1).alias("k1")]
     for k in range(2, order + 1):
         fields.append(pad(keys[k], k).alias(f"k{k}"))
         # prefix of the k-gram at position i = (k-1)-gram at i-1:
         # shift right one and trim the tail so every level stays
-        # position-aligned (arrays_zip NULL-pads ragged inputs)
+        # position-aligned (arrays_zip NULL-pads ragged inputs); pad
+        # gives one entry per token, so the length is never negative
         prev = pad(keys[k - 1], k - 1)
         fields.append(F.concat(
             F.array(null_s),
@@ -588,9 +602,9 @@ def ngram_logprob(
                     F.col("cnt").alias(f"x{k}"))),
                 f"p{k}", "left")
 
-    floor = F.lit(math.log(0.5 / float(total)))
+    floor = F.lit(math.log(0.5 / total))
     uni_score = F.coalesce(
-        F.log(F.col("c1") / F.lit(float(total))), floor)
+        F.log(F.col("c1") / F.lit(total)), floor)
     la = F.log(F.lit(alpha))
     # levels attempted at this position = min(order, i+1) — encoded by
     # which context keys are non-NULL

@@ -1079,3 +1079,43 @@ def test_ngram_logprob_backoff_chain(spark):
              + (2 * math.log(0.4) + math.log(0.5 / 6))) / 3
     assert abs(got[1] - round(want1, 6)) < 1e-9
     assert abs(got[2] - round(want2, 6)) < 1e-9
+
+
+def test_ngram_logprob_short_documents(spark):
+    """Documents shorter than the order score every token with the levels
+    they have: no slice error, one row per token, and the same score as the
+    bigram model (a 2-token document never reaches a trigram)."""
+    import math
+
+    from shapely_spark.text.quality import bigram_logprob, ngram_logprob
+
+    lm = spark.createDataFrame([(0, "a b c a b"), (1, "b c d")],
+                               "doc_id long, text string")
+    docs = spark.createDataFrame([(1, "a"), (2, "a b"), (3, "d e")],
+                                 "doc_id long, text string")
+    got = {r.doc_id: (r.n_tokens, r.avg_logp) for r in
+           ngram_logprob(docs, lm_corpus=lm, order=3).collect()}
+    # total 8: a: ln(2/8); b|a: "a b" twice / a twice → ln(1)
+    assert got[1] == (1, round(math.log(2 / 8), 6))
+    assert got[2] == (2, round((math.log(2 / 8) + math.log(1.0)) / 2, 6))
+    bigram = {r.doc_id: (r.n_tokens, r.avg_logp) for r in
+              bigram_logprob(docs, lm_corpus=lm).collect()}
+    assert got == bigram
+    for order in (4, 5):
+        assert {r.doc_id: (r.n_tokens, r.avg_logp) for r in ngram_logprob(
+            docs, lm_corpus=lm, order=order).collect()} == bigram
+
+
+def test_logprob_empty_lm_corpus_raises(spark):
+    import pytest
+
+    from shapely_spark.text.quality import (bigram_logprob, ngram_logprob,
+                                            unigram_logprob)
+
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    nulls = spark.createDataFrame([(1, None)], "doc_id long, text string")
+    for lm in (empty, nulls):
+        for fn in (unigram_logprob, bigram_logprob, ngram_logprob):
+            with pytest.raises(ValueError, match="LM corpus has no tokens"):
+                fn(docs, lm_corpus=lm)
