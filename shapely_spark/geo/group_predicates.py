@@ -438,6 +438,14 @@ def group_predicate(predicate: str, lgeoms: list, rgeom) -> np.ndarray | None:
                 rep_int = _points_interior_many(reps, lefts).any(axis=0)
                 inter |= rep_int
                 ii |= rep_int
+            # a left vertex within rounding of an R edge can read EXTERIOR
+            # to the point classifier yet zero to the orientation test the
+            # scalar intersects uses (kernels.group_intersects stage 3):
+            # run that edge×edge stage, batched, on the undecided lefts
+            und = np.flatnonzero(~inter & ~ii)
+            if len(und):
+                le, eo = _ragged_stack([_edges(lefts[k]) for k in und], 4)
+                inter[und[K._segments_intersect_pairs(le, eo, eb, len(und))]] = True
             out[ids] = inter & ~ii
         return out
 

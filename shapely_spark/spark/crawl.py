@@ -52,12 +52,14 @@ def latest_snapshot(
 ) -> DataFrame:
     """One row per url: the fetch with the greatest `ts_col`.
 
-    Tie semantics: pass `content_col` to break equal-(url, ts) fetches
-    deterministically by the content digest (lowest xxhash64 wins — a
-    row-distinguishing key, so the pick is stable under retries and AQE
-    re-planning). Without it, equal-(url, ts) duplicates are picked
-    ARBITRARILY (whichever row the window scans first) — fine when the
-    archive's (url, ts) is unique, which CDX capture keys are.
+    Tie semantics: pass `content_col` to break equal-(url, ts) fetches by
+    the content digest (lowest xxhash64 wins). The pick is deterministic
+    only up to content equality: rows with equal (url, ts, content) — or
+    contents whose digests collide — still tie, and which of them is kept
+    is arbitrary (other columns of those rows may differ). Without
+    `content_col`, every equal-(url, ts) duplicate is picked ARBITRARILY
+    (whichever row the window scans first) — fine when the archive's
+    (url, ts) is unique, which CDX capture keys are.
 
     This is the "current web" view of a crawl archive. One hash shuffle
     on url; the window computes row_number over (url) ordered by ts desc

@@ -276,166 +276,47 @@ def _geom_from_wkb_cached(wkb: bytes):
     return g
 
 
-# rect×rect predicates evaluable in closed form (exact — rectangle DE-9IM
-# reduces to interval arithmetic; covers collinear-edge and corner touches
-# that vertex/crossing heuristics miss). A/B are (n,4) [x0,y0,x1,y1] arrays.
-def _rect_pair_eval(predicate: str, A: np.ndarray, B: np.ndarray) -> np.ndarray | None:
-    closed = (
-        (A[:, 0] <= B[:, 2]) & (B[:, 0] <= A[:, 2])
-        & (A[:, 1] <= B[:, 3]) & (B[:, 1] <= A[:, 3])
-    )
-    interiors = (
-        (A[:, 0] < B[:, 2]) & (B[:, 0] < A[:, 2])
-        & (A[:, 1] < B[:, 3]) & (B[:, 1] < A[:, 3])
-    )
-    a_in_b = (
-        (A[:, 0] >= B[:, 0]) & (A[:, 2] <= B[:, 2])
-        & (A[:, 1] >= B[:, 1]) & (A[:, 3] <= B[:, 3])
-    )
-    b_in_a = (
-        (B[:, 0] >= A[:, 0]) & (B[:, 2] <= A[:, 2])
-        & (B[:, 1] >= A[:, 1]) & (B[:, 3] <= A[:, 3])
-    )
-    if predicate == "intersects":
-        return closed
-    if predicate == "disjoint":
-        return ~closed
-    if predicate in ("within", "covered_by"):
-        return a_in_b  # positive-extent rects: containment ⇒ interior overlap
-    if predicate in ("contains", "covers"):
-        return b_in_a
-    if predicate == "contains_properly":
-        return (
-            (B[:, 0] > A[:, 0]) & (B[:, 2] < A[:, 2])
-            & (B[:, 1] > A[:, 1]) & (B[:, 3] < A[:, 3])
-        )
-    if predicate == "touches":
-        return closed & ~interiors
-    if predicate == "equals":
-        return (A == B).all(axis=1)
-    if predicate == "overlaps":
-        return interiors & ~a_in_b & ~b_in_a
-    return None
-
-
 def _pair_refine_batch(
     predicate: str, lwkb: pd.Series, rcodes: np.ndarray, runiq_geoms: list
 ) -> np.ndarray:
-    """Batch refine for candidate (left_geom, right_geom) pairs. Both sides
-    factorized; each unique geometry is parsed ONCE per batch (and cached
-    per executor across batches). Stages, in decreasing vectorization:
-
-    1. one-shot NumPy bbox mask over the whole batch (bbox-disjoint ⇒ every
-       supported predicate is False — no per-pair Python);
-    2. point-left × polygon-right: prepared point-in-polygon classify per
-       right group (one vectorized call per right geometry);
-    3. rect×rect pairs: closed-form interval arithmetic for the whole
-       sub-batch at once (exact, incl. collinear-edge/corner touches);
-    4. remainder: exact scalar kernel per pair, iterated grouped by right
-       code so each right geometry's derived state stays cache-hot.
+    """Batch refine for candidate (left_geom, right_geom) pairs: the left
+    side is factorized so each unique geometry is parsed ONCE per batch
+    (and cached per executor across batches), then rows are grouped by
+    right code and each group is ONE group_predicate call — a stacked
+    NumPy cascade per right geometry (geo/group_predicates.py). The
+    scalar kernel runs per pair only where group_predicate declines the
+    batch shape (non-areal right). No bbox gate here: every row already
+    passed the JVM bbox prefilter, and group_predicate gates again.
 
     runiq_geoms: parsed Geometry (or None) per unique right code;
-    rcodes: per-row right code (-1 = null)."""
+    rcodes: per-row right code (-1 = null, i.e. a JVM-decided rect row)."""
     from ..geo import kernels as K
-    from ..geo.geom import MULTIPOLYGON, POINT, POLYGON
-
-    fn = getattr(K, predicate)
-    n = len(lwkb)
-    out = np.zeros(n, dtype=bool)
-    lcodes, luniq = pd.factorize(lwkb)
-    lgeoms = [None if w is None else _geom_from_wkb_cached(bytes(w)) for w in luniq]
-
-    def _bounds_arr(geoms) -> np.ndarray:
-        arr = np.full((max(len(geoms), 1), 4), np.nan)
-        for i, g in enumerate(geoms):
-            if g is not None and not g.is_empty:
-                arr[i] = K.bounds(g)
-        return arr
-
-    LB, RB = _bounds_arr(lgeoms), _bounds_arr(runiq_geoms)
-    lc = np.asarray(lcodes, dtype=np.int64)
-    rc = np.asarray(rcodes, dtype=np.int64)
-    valid = (lc >= 0) & (rc >= 0)
-    lci, rci = np.where(valid, lc, 0), np.where(valid, rc, 0)
-    lb, rb = LB[lci], RB[rci]
-    alive = (
-        valid
-        & ~np.isnan(lb[:, 0]) & ~np.isnan(rb[:, 0])
-        & ~((lb[:, 0] > rb[:, 2]) | (lb[:, 2] < rb[:, 0])
-            | (lb[:, 1] > rb[:, 3]) | (lb[:, 3] < rb[:, 1]))
-    )
-    if not alive.any():
-        return out
-
-    all_points = bool(len(lgeoms)) and all(
-        g is not None and g.type_id == POINT and not g.is_empty for g in lgeoms
-    )
-    all_rpoly = all(
-        g is None or g.type_id in (POLYGON, MULTIPOLYGON) for g in runiq_geoms
-    )
-    if all_points and all_rpoly and predicate in _PREDICATES:
-        px = np.array([g.coords[0][0] for g in lgeoms])[lc]
-        py = np.array([g.coords[0][1] for g in lgeoms])[lc]
-        alive_idx = np.flatnonzero(alive)
-        for u, gi in _group_ranges(rc[alive_idx]):
-            if runiq_geoms[u] is None:
-                continue
-            sel = alive_idx[gi]
-            prep = K.PreparedPolygons([runiq_geoms[u]])
-            out[sel] = _classify_to_bool(prep.classify(0, px[sel], py[sel]), predicate)
-        return out
-
-    # rect×rect sub-batch, closed form
-    lrect = np.full((len(lgeoms), 4), np.nan)
-    for i, g in enumerate(lgeoms):
-        r = K._axis_rect(g) if g is not None and g.type_id == POLYGON else None
-        if r is not None:
-            lrect[i] = r
-    rrect = np.full((max(len(runiq_geoms), 1), 4), np.nan)
-    for i, g in enumerate(runiq_geoms):
-        r = K._axis_rect(g) if g is not None and g.type_id == POLYGON else None
-        if r is not None:
-            rrect[i] = r
-    A, B = lrect[lci], rrect[rci]
-    rect_rows = alive & ~np.isnan(A[:, 0]) & ~np.isnan(B[:, 0])
-    remainder = alive & ~rect_rows
-    if rect_rows.any():
-        res = _rect_pair_eval(predicate, A[rect_rows], B[rect_rows])
-        if res is not None:
-            out[rect_rows] = res
-        else:
-            remainder = alive  # predicate has no closed form; scalar everything
-
-    # group-vectorized kernel for the rest, grouped by right code — ONE
-    # stacked NumPy cascade per right geometry for every supported
-    # predicate (geo/group_predicates.py, r5; intersects was the first,
-    # kernels.group_intersects r4). Per-pair scalar dispatch remains only
-    # for batch shapes the group kernel declines (non-areal right,
-    # GeometryCollection lefts handled inside it).
     from ..geo.group_predicates import group_predicate
 
-    idx = np.nonzero(remainder)[0]
-    if len(idx):
-        for u, gi in _group_ranges(rc[idx]):
-            rg = runiq_geoms[u]
-            if rg is None:
-                continue
-            sel = idx[gi]
-            batch = [lgeoms[lc[i]] for i in sel]
-            res = group_predicate(predicate, batch, rg)
-            if res is None:
-                res = np.fromiter(
-                    (g is not None and bool(fn(g, rg)) for g in batch),
-                    dtype=bool, count=len(batch))
-            out[sel] = res
+    out = np.zeros(len(lwkb), dtype=bool)
+    lcodes, luniq = pd.factorize(lwkb)
+    lgeoms = [_geom_from_wkb_cached(bytes(w)) for w in luniq]
+    for u, sel in _group_ranges(np.asarray(rcodes, dtype=np.int64)):
+        rg = runiq_geoms[u] if u >= 0 else None
+        if rg is None:
+            continue
+        batch = [lgeoms[c] if c >= 0 else None for c in lcodes[sel]]
+        res = group_predicate(predicate, batch, rg)
+        if res is None:
+            fn = getattr(K, predicate)
+            res = np.fromiter(
+                (g is not None and bool(fn(g, rg)) for g in batch),
+                dtype=bool, count=len(batch))
+        out[sel] = res
     return out
 
 
 def _rect_pred_col(predicate: str):
     """Closed-form rect×rect predicate as a pure Catalyst expression over
-    the two bbox column sets — the JVM twin of _rect_pair_eval (an
-    axis-aligned rectangle IS its bbox). Returns None when the predicate
-    has no closed form (those rows route to the Python refine)."""
+    the two bbox column sets (an axis-aligned rectangle IS its bbox, so
+    rectangle DE-9IM reduces to interval arithmetic, exact on collinear
+    edges and corner touches). Total over _GEOM_JOIN_PREDICATES: rect×rect
+    rows never reach the Python refine."""
     lx, ly, lx2, ly2 = (F.col(c) for c in ("__lx", "__ly", "__lx2", "__ly2"))
     rx, ry, rx2, ry2 = (F.col(c) for c in ("__rx", "__ry", "__rx2", "__ry2"))
     closed = (lx <= rx2) & (rx <= lx2) & (ly <= ry2) & (ry <= ly2)
@@ -456,7 +337,9 @@ def _rect_pred_col(predicate: str):
         return (lx == rx) & (ly == ry) & (lx2 == rx2) & (ly2 == ry2)
     if predicate == "overlaps":
         return interiors & ~a_in_b & ~b_in_a
-    return None  # e.g. crosses (always False rect×rect but dim-dependent)
+    if predicate == "crosses":
+        return F.lit(False)  # two polygons never cross (kernels.crosses)
+    raise ValueError(f"no rect×rect form for predicate {predicate!r}")
 
 
 # predicates spatial_join_geom supports: every one implies the pair shares
@@ -490,8 +373,12 @@ def spatial_join_geom(
     on cell. A pair that shares k cells would appear k times, so each
     candidate is emitted only in ONE deterministic cell — the cell of the
     lower-left corner of the bbox intersection (computable from the two
-    bbox columns JVM-side, no dedup shuffle). Refine runs the exact
-    DE-9IM kernel per pair with the right-side geometries broadcast.
+    bbox columns JVM-side, no dedup shuffle), and bbox-disjoint candidates
+    drop JVM-side. A pair of axis-aligned rectangles is decided by the
+    closed-form Catalyst predicate (_rect_pred_col); every other pair goes
+    to ONE Arrow refine UDF, which groups rows by right geometry and runs
+    group_predicate per group (_pair_refine_batch). Right geometries are
+    broadcast (broadcast=True) or ride the right cover rows as WKB.
     """
     from ..index.cells import cover_bbox_batch, grid_n
 
@@ -562,16 +449,24 @@ def spatial_join_geom(
         F.col("bxmax").alias("__rx2"), F.col("bymax").alias("__ry2"),
         F.col("is_rect").alias("__rrect"),
     ]
-    if not broadcast:
-        rcols.append(F.col("wkb").alias("__rwkb"))
-    rcov = rcov.select(*rcols)
+    # the two modes differ only in how the refine resolves a right key to
+    # WKB: broadcast ships the right ids and a driver-collected dict,
+    # shuffle inlines the WKB on the right cover rows
     if broadcast:
-        rcov = F.broadcast(rcov)
         # geometry dict rides a torrent broadcast; the join moves only ints
         geo_rows = right.select(right_id, "wkb").collect()
         bc = left.sparkSession.sparkContext.broadcast(
             {int(r[0]): bytes(r[1]) for r in geo_rows if r[1] is not None}
         )
+        rcov = F.broadcast(rcov.select(*rcols))
+        rkey = F.col(right_id)
+
+        def right_wkb(k):
+            return bc.value.get(int(k))
+    else:
+        rcov = rcov.select(*rcols, F.col("wkb").alias("__rwkb"))
+        rkey = F.col("__rwkb")
+        right_wkb = bytes
 
     j = lcov.join(rcov, F.col("__lc") == F.col("__rc"), "inner")
     # emit each candidate pair exactly once: in the cell holding the
@@ -589,49 +484,24 @@ def spatial_join_geom(
         & (F.col("__ly") <= F.col("__ry2")) & (F.col("__ry") <= F.col("__ly2"))
     )
 
-    if broadcast:
-
-        @F.pandas_udf("boolean")
-        def refine(rid: pd.Series, lwkb: pd.Series) -> pd.Series:
-            rcodes, runiq = pd.factorize(rid)
-            runiq_geoms = []
-            for u in runiq:
-                w = bc.value.get(int(u))
-                runiq_geoms.append(None if w is None else _geom_from_wkb_cached(w))
-            return pd.Series(_pair_refine_batch(predicate, lwkb, rcodes, runiq_geoms))
-
-        refine_call = refine(F.col(right_id), F.col("__lwkb"))
-    else:
-
-        @F.pandas_udf("boolean")
-        def refine_wkb(rwkb: pd.Series, lwkb: pd.Series) -> pd.Series:
-            rcodes, runiq = pd.factorize(rwkb)
-            runiq_geoms = [
-                None if w is None else _geom_from_wkb_cached(bytes(w)) for w in runiq
-            ]
-            return pd.Series(_pair_refine_batch(predicate, lwkb, rcodes, runiq_geoms))
-
-        refine_call = refine_wkb(F.col("__rwkb"), F.col("__lwkb"))
+    @F.pandas_udf("boolean")
+    def refine(rkey: pd.Series, lwkb: pd.Series) -> pd.Series:
+        rcodes, runiq = pd.factorize(rkey)
+        runiq_geoms = []
+        for k in runiq:
+            w = right_wkb(k)
+            runiq_geoms.append(None if w is None else _geom_from_wkb_cached(w))
+        return pd.Series(_pair_refine_batch(predicate, lwkb, rcodes, runiq_geoms))
 
     # rect×rect rows are decided by pure-JVM interval arithmetic and ship
     # NULL into the refine UDF (no geometry bytes over Arrow, no kernel
-    # work — _pair_refine_batch returns False for null rows in one
-    # vectorized mask). ONE scan: an earlier two-branch union re-executed
-    # the whole cover fan-out per branch, which at 100 TB doubles the
-    # dominant cost (measured 6.6 s → 3.7 s on the all-non-rect n-gon
-    # battery query, and strictly less work for mixed layers).
-    rect_expr = _rect_pred_col(predicate)
-    if rect_expr is not None:
-        both_rect = F.col("__lrect") & F.col("__rrect")
-        if broadcast:
-            py_call = refine(
-                F.when(~both_rect, F.col(right_id)),
-                F.when(~both_rect, F.col("__lwkb")))
-        else:
-            py_call = refine_wkb(
-                F.when(~both_rect, F.col("__rwkb")),
-                F.when(~both_rect, F.col("__lwkb")))
-        return j.where(
-            (both_rect & rect_expr) | (~both_rect & py_call)
-        ).select(left_id, right_id)
-    return j.where(refine_call).select(left_id, right_id)
+    # work — _pair_refine_batch skips the null right code). ONE scan: an
+    # earlier two-branch union re-executed the whole cover fan-out per
+    # branch, which at 100 TB doubles the dominant cost (measured 6.6 s →
+    # 3.7 s on the all-non-rect n-gon battery query, and strictly less
+    # work for mixed layers).
+    both_rect = F.col("__lrect") & F.col("__rrect")
+    py_call = refine(F.when(~both_rect, rkey), F.when(~both_rect, F.col("__lwkb")))
+    return j.where(
+        (both_rect & _rect_pred_col(predicate)) | (~both_rect & py_call)
+    ).select(left_id, right_id)

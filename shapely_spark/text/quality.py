@@ -489,9 +489,6 @@ def bigram_logprob(
                  F.round(F.avg(logp), 6).alias("avg_logp")))
 
 
-_NGRAM_SEP = "\x1f"
-
-
 def ngram_logprob(
     docs: DataFrame,
     lm_corpus: DataFrame | None = None,
@@ -531,19 +528,19 @@ def ngram_logprob(
     lm_toks = F.split(F.col(text_col), " ")
 
     def kgram_keys(toks, k):
-        """array of k-gram key strings (max(size - k + 1, 0) entries):
-        zip_with chain over k shifted slices, separator-joined."""
+        """k-gram keys (max(size - k + 1, 0) entries): the tokens for
+        k = 1, else one array<string> of k tokens per k-gram, built as a
+        zip_with chain over k shifted slices. Array keys cannot collide
+        the way separator-joined strings do (token "a\x1fb" vs a, b)."""
         if k == 1:
             return toks
         # a document shorter than k tokens has no k-grams (slice rejects
         # a negative length)
         n = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-        acc = F.slice(toks, 1, n)
+        acc = F.transform(F.slice(toks, 1, n), lambda a: F.array(a))
         for j in range(1, k):
             nxt = F.slice(toks, 1 + j, n)
-            acc = F.zip_with(
-                acc, nxt,
-                lambda a, b: F.concat(a, F.lit(_NGRAM_SEP), b))
+            acc = F.zip_with(acc, nxt, lambda a, b: F.concat(a, F.array(b)))
         return acc
 
     total = _lm_total(lm, lm_toks)
@@ -565,7 +562,9 @@ def ngram_logprob(
                       F.split(F.col(text_col), " ").alias("__toks"))
     toks = F.col("__toks")
     keys = {k: kgram_keys(toks, k) for k in range(1, order + 1)}
-    null_s = F.lit(None).cast("string")
+
+    def null_key(k):
+        return F.lit(None).cast("string" if k == 1 else "array<string>")
 
     def pad(arr, k):
         """align the k-gram key array to positions: NULL for the first
@@ -574,7 +573,7 @@ def ngram_logprob(
         if k == 1:
             return arr
         lead = F.least(F.size(toks), F.lit(k - 1))
-        return F.concat(F.array_repeat(null_s, lead), arr)
+        return F.concat(F.array_repeat(null_key(k), lead), arr)
 
     fields = [pad(keys[1], 1).alias("k1")]
     for k in range(2, order + 1):
@@ -585,7 +584,7 @@ def ngram_logprob(
         # gives one entry per token, so the length is never negative
         prev = pad(keys[k - 1], k - 1)
         fields.append(F.concat(
-            F.array(null_s),
+            F.array(null_key(k - 1)),
             F.slice(prev, 1, F.size(prev) - 1)).alias(f"p{k}"))
     zipped = F.arrays_zip(*fields)
     ev = (d_t.select(F.col(id_col), F.explode(zipped).alias("z"))

@@ -103,12 +103,17 @@ def test_shuffle_mode_same_result(spark, pages, regions):
 
 
 def test_spatial_join_geom_matches_bruteforce(spark):
-    """Geometry×geometry join on irregular polygons vs O(n²) kernel oracle."""
+    """Geometry×geometry join vs an O(n²) scalar-kernel oracle, in both
+    broadcast modes. Lefts: irregular n-gons, plus points and segments
+    placed on the regions' exact vertices and edge midpoints (boundary
+    hits) and scattered around them — point and line lefts take the same
+    grouped refine as polygons, so every boundary case goes through
+    group_predicate."""
     import pandas as pd
 
     from shapely_spark.geo import kernels as K
-    from shapely_spark.geo.geom import regular_ngon
-    from shapely_spark.geo.wkb import from_wkb, to_wkb
+    from shapely_spark.geo.geom import linestring, point, regular_ngon
+    from shapely_spark.geo.wkb import to_wkb
     from shapely_spark.spark.join import spatial_join_geom
     from shapely_spark.spark.pages import regions_df, synth_regions
 
@@ -120,22 +125,41 @@ def test_spatial_join_geom_matches_bruteforce(spark):
         hy, hx = (40.71, -74.00) if i % 2 else (51.51, -0.13)
         g = regular_ngon(hx + (i % 11) * 0.2 - 1.0, hy + (i % 7) * 0.2 - 0.6,
                          0.15 + (i % 5) * 0.05, 5 + i % 6, theta0=i * 0.3)
-        lgeoms.append((i, g))
+        lgeoms.append(g)
+    rng = np.random.RandomState(3)
+    for _rid, _name, rg, _kind in rng_regions:
+        if rg.is_empty:
+            continue
+        ring = np.asarray(rg.rings[0] if rg.rings else rg.parts[0].rings[0])[:, :2]
+        v, w = ring[rng.choice(len(ring) - 1, 2, replace=False)]
+        mid = (ring[0] + ring[1]) / 2
+        x0, y0, x1, y1 = K.bounds(rg)
+        inside = rng.uniform([x0, y0], [x1, y1])
+        lgeoms += [
+            point(*v), point(*mid), point(*inside),            # vertex, edge, scatter
+            point(*rng.uniform([x0 - 0.3, y0 - 0.3], [x1 + 0.3, y1 + 0.3])),
+            linestring([v, w]),                                # vertex to vertex
+            linestring([ring[0], ring[1]]),                    # along an edge
+            linestring([inside, inside + rng.uniform(-1, 1, 2)]),
+            linestring([mid, mid + (mid - inside)]),           # edge point outward
+        ]
     left = spark.createDataFrame(
-        pd.DataFrame({"left_id": [i for i, _ in lgeoms],
-                      "wkb": [to_wkb(g) for _, g in lgeoms]}),
+        pd.DataFrame({"left_id": list(range(len(lgeoms))),
+                      "wkb": [to_wkb(g) for g in lgeoms]}),
         "left_id long, wkb binary",
     )
-    got = {(r.left_id, r.region_id)
-           for r in spatial_join_geom(left, right, left_id="left_id").collect()}
-    want = set()
-    for i, lg in lgeoms:
-        for rid, name, rg, kind in rng_regions:
-            if rg.is_empty:
-                continue
-            if K.intersects(lg, rg):
-                want.add((i, rid))
-    assert got == want
+    for pred in ["intersects", "within", "covered_by", "touches", "crosses"]:
+        fn = getattr(K, pred)
+        want = {(i, rid) for i, lg in enumerate(lgeoms)
+                for rid, _name, rg, _kind in rng_regions
+                if not rg.is_empty and fn(lg, rg)}
+        assert want, pred
+        for broadcast in (True, False):
+            got = {(r.left_id, r.region_id)
+                   for r in spatial_join_geom(left, right, predicate=pred,
+                                              left_id="left_id",
+                                              broadcast=broadcast).collect()}
+            assert got == want, (pred, broadcast, sorted(got ^ want)[:5])
 
 
 def test_spatial_join_plan_is_broadcast_no_pages_shuffle(spark):
@@ -284,45 +308,48 @@ def test_coverage_simplify_grouped(spark):
         assert len(s1.rings[0]) < len(p1.rings[0])
 
 
-def test_rect_pair_eval_matches_scalar_kernels():
-    """The closed-form rect×rect vectorized refine must agree with the
-    exact scalar kernels on every adversarial configuration: corner touch,
-    collinear edge overlap, shared-edge containment, equality, interior
-    containment, partial overlap, disjoint."""
-    import numpy as np
-
+def test_rect_pred_col_matches_scalar_kernels(spark):
+    """The closed-form rect×rect Catalyst predicate (the only path a pair
+    of axis-aligned rectangles takes in spatial_join_geom) must agree with
+    the exact scalar kernels for every supported predicate on every
+    adversarial configuration: corner touch, shared edge, partial shared
+    edge, containment sharing a boundary, equality, interior containment,
+    partial overlap, disjoint. crosses is False for every pair."""
     from shapely_spark.geo import kernels as K
     from shapely_spark.geo.geom import box
-    from shapely_spark.spark.join import _rect_pair_eval
+    from shapely_spark.spark.join import _GEOM_JOIN_PREDICATES, _rect_pred_col
 
-    rects = [
-        (0, 0, 2, 2), (2, 2, 4, 4),      # corner touch
-        (0, 0, 2, 2), (2, 0, 4, 2),      # full shared edge
-        (0, 0, 4, 2), (2, 0, 6, 2),      # partial collinear edge overlap? no — interiors overlap
-        (0, 0, 4, 1), (4, 0.5, 6, 2),    # partial shared-edge segment
-        (0, 0, 4, 4), (1, 1, 3, 3),      # interior containment
-        (0, 0, 4, 4), (0, 0, 2, 4),      # containment sharing boundary
-        (0, 0, 2, 2), (0, 0, 2, 2),      # equal
-        (0, 0, 1, 1), (3, 3, 4, 4),      # disjoint
-        (0, 0, 3, 3), (2, 2, 5, 5),      # partial overlap
+    pairs = [
+        ((0, 0, 2, 2), (2, 2, 4, 4)),      # corner touch
+        ((0, 0, 2, 2), (2, 0, 4, 2)),      # full shared edge
+        ((0, 0, 4, 2), (2, 0, 6, 2)),      # overlap along a shared edge line
+        ((0, 0, 4, 1), (4, 0.5, 6, 2)),    # partial shared-edge segment
+        ((0, 0, 4, 4), (1, 1, 3, 3)),      # interior containment
+        ((0, 0, 4, 4), (0, 0, 2, 4)),      # containment sharing boundary
+        ((0, 0, 2, 4), (0, 0, 4, 4)),      # the same, reversed
+        ((0, 0, 2, 2), (0, 0, 2, 2)),      # equal
+        ((0, 0, 1, 1), (3, 3, 4, 4)),      # disjoint
+        ((0, 0, 3, 3), (2, 2, 5, 5)),      # partial overlap
     ]
-    A = np.array(rects[0::2], dtype=float)
-    B = np.array(rects[1::2], dtype=float)
-    geoms_a = [box(*r) for r in rects[0::2]]
-    geoms_b = [box(*r) for r in rects[1::2]]
-    for pred in ["intersects", "disjoint", "within", "covered_by", "contains",
-                 "covers", "contains_properly", "touches", "equals", "overlaps"]:
-        got = _rect_pair_eval(pred, A, B)
-        fn = getattr(K, pred)
-        want = np.array([bool(fn(a, b)) for a, b in zip(geoms_a, geoms_b)])
-        assert got is not None and (got == want).all(), (
-            pred, got.tolist(), want.tolist())
+    cols = ["__lx", "__ly", "__lx2", "__ly2", "__rx", "__ry", "__rx2", "__ry2"]
+    df = spark.createDataFrame(
+        [(k, *map(float, a), *map(float, b)) for k, (a, b) in enumerate(pairs)],
+        ["k"] + cols)
+    preds = sorted(_GEOM_JOIN_PREDICATES)
+    rows = df.select("k", *[_rect_pred_col(p).alias(p) for p in preds]) \
+        .orderBy("k").collect()
+    for p in preds:
+        got = [bool(r[p]) for r in rows]
+        fn = getattr(K, p)
+        want = [bool(fn(box(*a), box(*b))) for a, b in pairs]
+        assert got == want, (p, got, want)
+    assert not any(r["crosses"] for r in rows)
 
 
 def test_spatial_join_geom_mixed_rects_and_ngons(spark):
-    """Mixed batch: rect lefts ride the closed-form path while n-gons fall
-    to the grouped scalar path — output must equal the O(n²) oracle for
-    both, and for a non-closed-form predicate (touches)."""
+    """Mixed batch: rect×rect pairs ride the closed-form JVM path while
+    pairs with an n-gon on either side take the grouped refine
+    (group_predicate) — output must equal the O(n²) oracle for both."""
     import pandas as pd
 
     from shapely_spark.geo import kernels as K
@@ -442,10 +469,10 @@ def test_group_intersects_matches_scalar_fuzz():
 
 
 def test_geom_join_rect_branch_has_no_udf(spark):
-    """r3 verdict item 3: when both sides are axis-aligned rectangles the
-    pair predicate evaluates JVM-side — the rect branch of the union plan
-    contains no ArrowEvalPython node, and the whole-plan answer still
-    matches brute force."""
+    """When both sides are axis-aligned rectangles the pair predicate
+    evaluates JVM-side: rect×rect rows feed NULL into the single refine
+    UDF, so the one-scan plan carries exactly one ArrowEvalPython node,
+    and the answer still matches brute force."""
     from shapely_spark.geo.geom import box
     from shapely_spark.geo.wkb import to_wkb
     from shapely_spark.spark.join import spatial_join_geom
@@ -459,7 +486,7 @@ def test_geom_join_rect_branch_has_no_udf(spark):
     out = spatial_join_geom(left, right, predicate="intersects",
                             left_id="left_id")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # union of two branches: exactly the non-rect branch carries the UDF
+    # one plan, one refine UDF (rect rows reach it NULL-fed)
     assert plan.count("ArrowEvalPython") == 1
     got = {(r.left_id, r.region_id) for r in out.collect()}
     want = {

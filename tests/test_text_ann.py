@@ -1106,6 +1106,26 @@ def test_ngram_logprob_short_documents(spark):
             docs, lm_corpus=lm, order=order).collect()} == bigram
 
 
+def test_ngram_logprob_keys_do_not_collide(spark):
+    """A token holding the unit separator must not alias a k-gram: the
+    bigram ("a\\x1fb", "c") in the LM and the bigram ("a", "b\\x1fc") in
+    the document are different keys (a separator-joined string key made
+    both "a\\x1fb\\x1fc" and scored the unseen bigram as seen)."""
+    import math
+
+    from shapely_spark.text.quality import bigram_logprob, ngram_logprob
+
+    lm = spark.createDataFrame([(0, "a\x1fb c"), (1, "a z")],
+                               "doc_id long, text string")
+    docs = spark.createDataFrame([(1, "a b\x1fc")], "doc_id long, text string")
+    # total 4: a: ln(1/4); b\x1fc|a unseen → α · OOV floor ln(0.5/4)
+    want = round((math.log(1 / 4) + math.log(0.4) + math.log(0.5 / 4)) / 2, 6)
+    for order in (2, 3):
+        r = ngram_logprob(docs, lm_corpus=lm, order=order).collect()[0]
+        assert (r.n_tokens, r.avg_logp) == (2, want), order
+    assert bigram_logprob(docs, lm_corpus=lm).collect()[0].avg_logp == want
+
+
 def test_logprob_empty_lm_corpus_raises(spark):
     import pytest
 
