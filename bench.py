@@ -17,7 +17,10 @@ Methodology: each headline plan runs once on a small slice first (untimed
 warmup — HotSpot compiles the generated whole-stage code; measured 30×
 interpreted-vs-JIT gap on the extract expression tree), then the timed run
 measures steady state. This mirrors cluster reality, where executors run
-thousands of tasks per stage and warmup is noise.
+thousands of tasks per stage and warmup is noise. Every timed headline
+path and battery query is evaluated by evaluate() — a noop write that
+computes every output column — never by count(), which can prune Python
+UDF columns out of the plan.
 
 Usage: python bench.py [--cpus N] [--sf-dir DIR] [--skip-battery] [--scaling]
   --scaling: run headline paths at local[8] AND local[32] (two separate
@@ -39,6 +42,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 BENCH_TMP = os.environ.get("SPARK_GRAFT_BENCH_TMP", "/tmp/shapely_spark_bench")
+
+
+def evaluate(df):
+    """Run a query to completion with every output column evaluated and
+    return it. A noop write materializes each row; a bare count() lets the
+    optimizer prune columns nobody reads, Python UDF columns included, so
+    a counted query can skip the kernel it is meant to time."""
+    df.write.format("noop").mode("overwrite").save()
+    return df
 
 
 def prepare_pages(spark, n_rows: int) -> str:
@@ -122,49 +134,42 @@ def run_headline(spark, n_pages: int, n_regions: int, times: dict, extras: dict,
     # ---- warmup (untimed): same plan shapes on the small slice ------------
     wpages = slim(warm_path).cache()
     wpages.count()
-    slim(warm_path).agg(
-        F.sum(F.when(F.col("cell_id") >= 0, 1).otherwise(0))).collect()
-    with_geo(spark.read.parquet(warm_path)).where(
-        F.length("extracted_text") > 0).count()
-    spatial_join(wpages, rdf, predicate="intersects").count()
-    tile_counts(wpages).count()
-    knn_join_broadcast(wpages, targets, k=1, point_id="url").count()
+    evaluate(slim(warm_path))
+    evaluate(with_geo(spark.read.parquet(warm_path)).where(
+        F.length("extracted_text") > 0))
+    evaluate(spatial_join(wpages, rdf, predicate="intersects"))
+    evaluate(tile_counts(wpages))
+    evaluate(knn_join_broadcast(wpages, targets, k=1, point_id="url"))
     wpages.unpersist()
 
     # ---- timed: steady state ---------------------------------------------
-    # pipeline timing: full scan→extract→cell job, repeated. Aggregating on
-    # the derived column forces the extract chain to evaluate exactly once
-    # per row — a bare count() is answered from parquet footers, and a
-    # FILTER on a derived column gets pushed through the aliases and
-    # re-evaluates the decode chain per reference.
-    n_geo = timed(
-        "pages_pipeline",
-        lambda: slim(pages_path).agg(
-            F.sum(F.when(F.col("cell_id") >= 0, 1).otherwise(0))
-        ).collect()[0][0],
-    )
-    extras["pages_rows_geotagged"] = int(n_geo)
+    # every timed query runs through evaluate(); the row counts reported in
+    # extras come from untimed count() jobs afterwards. Pipeline timing:
+    # full scan→extract→cell job, repeated — a bare count() would be
+    # answered from parquet footers.
+    timed("pages_pipeline", lambda: evaluate(slim(pages_path)))
     pages = slim(pages_path).cache()
     n = pages.count()
+    extras["pages_rows_geotagged"] = pages.where(F.col("cell_id") >= 0).count()
     extras["pages_rows"] = n
     extras["pages_rows_per_sec"] = round(n / times["pages_pipeline"], 1)
 
-    timed("text_extract", lambda: with_geo(spark.read.parquet(pages_path)).where(
-        F.length("extracted_text") > 0).count())
+    timed("text_extract", lambda: evaluate(with_geo(spark.read.parquet(
+        pages_path)).where(F.length("extracted_text") > 0)))
     extras["text_extract_rows_per_sec"] = round(n / times["text_extract"], 1)
 
-    pairs = timed("spatial_join_pages",
-                  lambda: spatial_join(pages, rdf, predicate="intersects").count())
+    pairs = timed("spatial_join_pages", lambda: evaluate(
+        spatial_join(pages, rdf, predicate="intersects"))).count()
     extras["spatial_join_pairs"] = pairs
     extras["spatial_join_rows_per_sec"] = round(n / times["spatial_join_pages"], 1)
     extras["spatial_join_pairs_per_sec"] = round(pairs / times["spatial_join_pages"], 1)
 
-    tiles = timed("tile_agg_pages", lambda: tile_counts(pages).count())
+    tiles = timed("tile_agg_pages", lambda: evaluate(tile_counts(pages))).count()
     extras["tile_assignments_per_sec"] = round(n / times["tile_agg_pages"], 1)
     extras["tiles"] = tiles
 
-    knn = timed("knn_pages",
-                lambda: knn_join_broadcast(pages, targets, k=1, point_id="url").count())
+    knn = timed("knn_pages", lambda: evaluate(
+        knn_join_broadcast(pages, targets, k=1, point_id="url"))).count()
     extras["knn_rows_per_sec"] = round(knn / times["knn_pages"], 1)
 
     # audit the cell-ring scale path's safety guarantee on the same data
@@ -220,8 +225,8 @@ def run_headline(spark, n_pages: int, n_regions: int, times: dict, extras: dict,
             ).alias("url"),
             "warc_ts", "text")
 
-    host_change_stats(archive(warm_path)).count()  # warm
-    timed("recrawl_stats", lambda: host_change_stats(archive(pages_path)).count())
+    evaluate(host_change_stats(archive(warm_path)))  # warm
+    timed("recrawl_stats", lambda: evaluate(host_change_stats(archive(pages_path))))
     extras["recrawl_rows_per_sec"] = round(n / times["recrawl_stats"], 1)
 
     # redirect chains over 4n ids (id → id-1 until a multiple of 5):
@@ -234,11 +239,11 @@ def run_headline(spark, n_pages: int, n_regions: int, times: dict, extras: dict,
         return (ids.where(F.col("id") % 5 != 0)
                 .select(F.col("id").alias("src"), (F.col("id") - 1).alias("dst")))
 
-    resolve_redirects(redirect_edges(warmup_rows), max_hops=8).count()  # warm
+    evaluate(resolve_redirects(redirect_edges(warmup_rows), max_hops=8))  # warm
     n_edges = timed(
         "redirect_resolve",
-        lambda: resolve_redirects(redirect_edges(4 * n), max_hops=8)
-        .where(F.col("final_url").isNotNull()).count())
+        lambda: evaluate(resolve_redirects(redirect_edges(4 * n), max_hops=8)
+                         .where(F.col("final_url").isNotNull()))).count()
     extras["redirect_edges_per_sec"] = round(n_edges / times["redirect_resolve"], 1)
 
     pages.unpersist()
@@ -300,7 +305,7 @@ def main():
             """Seconds for one run of a battery query; None if it failed."""
             t0 = time.time()
             try:
-                QUERIES[name](spark, sf_dir).count()
+                evaluate(QUERIES[name](spark, sf_dir))
             except Exception as ex:
                 failures.setdefault(
                     name, f"{phase}: {type(ex).__name__}: {ex}"[:200])

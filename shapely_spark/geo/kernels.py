@@ -8,7 +8,7 @@ single-node oracle in tests. No GEOS, no shapely import.
 Hot path design (reference: shapely/predicates.py:1311 contains_xy /
 :1367 intersects_xy): the point side stays as bare float64 (x, y) arrays
 end-to-end — geometry objects are only materialized for the (small,
-broadcast) polygon side, which is "prepared" once per executor
+broadcast) polygon side, which is "prepared" once into a RaggedPolygonLayer
 (reference prepared-geometry semantics: shapely/creation.py:735 prepare).
 """
 
@@ -234,93 +234,44 @@ def points_in_rings_class(px, py, rings) -> np.ndarray:
     return out
 
 
-class PreparedPolygons:
-    """Executor-local prepared polygon layer (reference semantics:
-    shapely/creation.py:735 prepare — a cached edge structure reused across
-    many predicate calls; here also STRtree-style bbox prune,
-    shapely/strtree.py:30).
-
-    Holds N polygons (polygon or multipolygon Geometry); classifies large
-    point batches against each. Built once per executor from a broadcast
-    variable — never per row (SURVEY.md §2.2).
-    """
-
-    def __init__(self, geoms: list[Geometry | None]):
-        self.geoms = geoms
-        self.ring_sets: list[list[np.ndarray]] = []
-        self.bboxes = np.full((len(geoms), 4), np.nan)
-        for i, g in enumerate(geoms):
-            rings: list[np.ndarray] = []
-            if g is not None and not g.is_empty:
-                if g.type_id == POLYGON:
-                    rings = [np.asarray(r)[:, :2] for r in g.rings]
-                elif g.type_id in (MULTIPOLYGON, GEOMETRYCOLLECTION):
-                    for p in g.parts or []:
-                        if p.type_id == POLYGON:
-                            rings.extend(np.asarray(r)[:, :2] for r in p.rings)
-                self.bboxes[i] = bounds(g)
-            self.ring_sets.append(rings)
-
-    def classify(self, idx: int, px, py) -> np.ndarray:
-        """0/1/2 classification of points vs polygon idx, bbox-pruned."""
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        out = np.zeros(px.shape, dtype=np.int8)
-        bb = self.bboxes[idx]
-        if np.isnan(bb[0]):
-            return out
-        mask = (px >= bb[0]) & (px <= bb[2]) & (py >= bb[1]) & (py <= bb[3])
-        if mask.any():
-            out[mask] = points_in_rings_class(px[mask], py[mask], self.ring_sets[idx])
-        return out
-
-    def test(self, idx: int, px, py, predicate: str) -> np.ndarray:
-        cls = self.classify(idx, px, py)
-        if predicate in ("intersects", "covers", "covered_by"):
-            return cls >= BOUNDARY
-        if predicate in ("contains", "within", "contains_properly"):
-            return cls == INTERIOR
-        if predicate == "touches":
-            return cls == BOUNDARY
-        if predicate == "disjoint":
-            return cls == EXTERIOR
-        raise ValueError(f"unsupported point-vs-polygon predicate {predicate!r}")
-
-
 class RaggedPolygonLayer:
-    """Whole-layer prepared structure for region-heterogeneous point
-    batches: all regions' edges concatenated into flat arrays with
-    per-region offsets, so classify_many vectorizes the ray-cast across
-    EVERY (point, its-region) pair in one shot (the north-star
-    'vectorized ray-casting' form; reference per-geometry analog:
-    shapely/creation.py:735 prepare).
+    """The engine's prepared point-in-polygon structure (reference
+    per-geometry analog: shapely/creation.py:735 prepare): all regions'
+    edges concatenated into flat arrays with per-region offsets, so
+    classify_many vectorizes the ray-cast across EVERY (point, its-region)
+    pair in one shot — the north-star 'vectorized ray-casting' form.
 
-    Why it exists: PreparedPolygons.classify costs ~20 µs of Python
-    dispatch per distinct region per batch. At a 100k-region layer each
-    Arrow batch holds ~1 candidate per region, so the per-group path
-    degenerates to per-row Python. Here the work per batch is a fixed
-    handful of NumPy ops over the expanded (candidate, edge) pairs —
-    identical FLOPs, no per-region dispatch.
+    Regions are keyed by any int64 id. Rows are stored densely in sorted-id
+    order next to the `ids` array, and an id resolves to its row with one
+    searchsorted, so negative, sparse or huge ids cost nothing extra; an id
+    the layer does not hold classifies EXTERIOR.
 
-    Built ONCE (driver side, then broadcast as plain arrays): workers
-    pay zero per-region construction. Semantics are bit-identical to
+    Why one vectorized pass: per-region dispatch costs ~20 µs of Python
+    per distinct region per batch, and at a 100k-region layer each Arrow
+    batch holds ~1 candidate per region, so a per-group path degenerates
+    to per-row Python. Here the work per batch is a fixed handful of NumPy
+    ops over the expanded (candidate, edge) pairs — no per-region dispatch.
+
+    The broadcast join builds it ONCE driver-side and ships it as plain
+    arrays; the shuffle join and st_contains_xy build one per batch over
+    the batch's unique WKBs. Semantics are bit-identical to
     points_in_rings_class: half-open even-odd crossing parity XOR-ed
     across rings == parity of total crossings over all non-degenerate
     ring edges; exact (eps=0) on-segment boundary test overrides;
     degenerate rings (<4 pts) contribute boundary segments only."""
 
-    __slots__ = ("n", "bbox", "cross_start", "cross_seg",
+    __slots__ = ("ids", "bbox", "cross_start", "cross_seg",
                  "bnd_start", "bnd_seg")
 
     def __init__(self, geoms_by_id: dict[int, "Geometry"]):
-        n = (max(geoms_by_id) + 1) if geoms_by_id else 0
-        self.n = n
+        self.ids = np.array(sorted(geoms_by_id), dtype=np.int64)
+        n = len(self.ids)
         self.bbox = np.full((n, 4), np.nan)
         cross_cnt = np.zeros(n, dtype=np.int64)
         bnd_cnt = np.zeros(n, dtype=np.int64)
         cross_parts: list[np.ndarray] = []
         bnd_parts: list[np.ndarray] = []
-        for rid in sorted(geoms_by_id):
+        for row, rid in enumerate(self.ids.tolist()):
             g = geoms_by_id[rid]
             rings: list[np.ndarray] = []
             if g is not None and not g.is_empty:
@@ -330,18 +281,15 @@ class RaggedPolygonLayer:
                     for p in g.parts or []:
                         if p.type_id == POLYGON:
                             rings.extend(np.asarray(r)[:, :2] for r in p.rings)
-                self.bbox[rid] = bounds(g)
-            ce, be = 0, 0
+                self.bbox[row] = bounds(g)
             for c in rings:
                 if len(c) >= 2:
                     seg = np.column_stack([c[:-1], c[1:]])
                     bnd_parts.append(seg)
-                    be += len(seg)
+                    bnd_cnt[row] += len(seg)
                     if len(c) >= 4:
                         cross_parts.append(seg)
-                        ce += len(seg)
-            cross_cnt[rid] = ce
-            bnd_cnt[rid] = be
+                        cross_cnt[row] += len(seg)
         self.cross_start = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(cross_cnt, out=self.cross_start[1:])
         self.bnd_start = np.zeros(n + 1, dtype=np.int64)
@@ -352,32 +300,35 @@ class RaggedPolygonLayer:
                         if bnd_parts else np.zeros((0, 4)))
 
     @staticmethod
-    def _expand(start: np.ndarray, rids: np.ndarray):
-        """(row_idx, edge_idx) for the ragged ranges of each row's region."""
-        cnt = start[rids + 1] - start[rids]
+    def _expand(start: np.ndarray, rows: np.ndarray):
+        """(row_idx, edge_idx) for the ragged edge ranges of each layer row."""
+        cnt = start[rows + 1] - start[rows]
         total = int(cnt.sum())
         if total == 0:
             return np.zeros(0, np.int64), np.zeros(0, np.int64)
-        row_idx = np.repeat(np.arange(len(rids), dtype=np.int64), cnt)
+        row_idx = np.repeat(np.arange(len(rows), dtype=np.int64), cnt)
         offs = np.arange(total, dtype=np.int64) - np.repeat(
             np.cumsum(cnt) - cnt, cnt)
-        return row_idx, start[rids][row_idx] + offs
+        return row_idx, start[rows][row_idx] + offs
 
-    def classify_many(self, rids, px, py) -> np.ndarray:
+    def classify_many(self, ids, px, py) -> np.ndarray:
         """0 exterior / 1 boundary / 2 interior of point i vs region
-        rids[i] — one vectorized pass for the whole heterogeneous batch."""
-        rids = np.asarray(rids, dtype=np.int64)
+        ids[i] — one vectorized pass for the whole heterogeneous batch."""
+        ids = np.asarray(ids, dtype=np.int64)
         px = np.asarray(px, dtype=np.float64)
         py = np.asarray(py, dtype=np.float64)
-        out = np.zeros(len(rids), dtype=np.int8)
-        ok = (rids >= 0) & (rids < self.n)
-        bb = self.bbox[np.where(ok, rids, 0)]
-        live = (ok & (px >= bb[:, 0]) & (px <= bb[:, 2])
+        out = np.zeros(len(ids), dtype=np.int8)
+        if len(self.ids) == 0:
+            return out
+        rows = np.minimum(np.searchsorted(self.ids, ids), len(self.ids) - 1)
+        bb = self.bbox[rows]
+        live = ((self.ids[rows] == ids)
+                & (px >= bb[:, 0]) & (px <= bb[:, 2])
                 & (py >= bb[:, 1]) & (py <= bb[:, 3]))
         if not live.any():
             return out
         li = np.nonzero(live)[0]
-        r, x, y = rids[li], px[li], py[li]
+        r, x, y = rows[li], px[li], py[li]
         # even-odd crossing parity over the region's own edges
         row, eidx = self._expand(self.cross_start, r)
         if len(row):
@@ -407,17 +358,25 @@ class RaggedPolygonLayer:
         return out
 
 
+def _classify_xy(geom: Geometry | None, x, y) -> np.ndarray:
+    """0/1/2 class of each point (x, y) vs one polygonal geometry, through
+    a one-row RaggedPolygonLayer; x and y broadcast against each other."""
+    x, y = np.broadcast_arrays(np.asarray(x, dtype=np.float64),
+                               np.asarray(y, dtype=np.float64))
+    cls = RaggedPolygonLayer({0: geom}).classify_many(
+        np.zeros(x.size, dtype=np.int64), x.ravel(), y.ravel())
+    return cls.reshape(x.shape)
+
+
 def contains_xy(geom: Geometry, x, y) -> np.ndarray:
     """reference: shapely/predicates.py:1311 — vectorized point fast path,
     auto-prepares (here: rings extracted once per call)."""
-    prep = PreparedPolygons([geom])
-    return prep.test(0, np.atleast_1d(x), np.atleast_1d(y), "contains")
+    return _classify_xy(geom, np.atleast_1d(x), np.atleast_1d(y)) == INTERIOR
 
 
 def intersects_xy(geom: Geometry, x, y) -> np.ndarray:
     """reference: shapely/predicates.py:1367."""
-    prep = PreparedPolygons([geom])
-    return prep.test(0, np.atleast_1d(x), np.atleast_1d(y), "intersects")
+    return _classify_xy(geom, np.atleast_1d(x), np.atleast_1d(y)) >= BOUNDARY
 
 
 # ---------------------------------------------------------------------------
@@ -1429,8 +1388,8 @@ def explain_validity(geom: Geometry | None) -> str | None:
 
 def prepare(geom: Geometry | None) -> None:
     """reference: shapely/prepared.py / _geometry.py prepare. In this
-    engine preparation is an executor-side cache keyed by geometry
-    (spark/join.py:100) — kernel-level prepare is a documented no-op."""
+    engine preparation is the RaggedPolygonLayer a point join builds over
+    its region layer — kernel-level prepare is a documented no-op."""
     return None
 
 
@@ -1442,7 +1401,8 @@ def destroy_prepared(geom: Geometry | None) -> None:
 
 def is_prepared(geom: Geometry | None) -> bool:
     """reference: shapely/predicates.py is_prepared — kernel-side objects
-    carry no prepared state (the executor cache holds it), so False."""
+    carry no prepared state (a point join's RaggedPolygonLayer holds it),
+    so False."""
     return False
 
 

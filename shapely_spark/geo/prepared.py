@@ -1,9 +1,9 @@
 """Prepared-geometry veneer (reference: shapely/prepared.py:8,72).
 
 The reference's PreparedGeometry wraps a geometry whose GEOS prepared
-state was built by ``shapely.prepare``; in this engine preparation is an
-executor-side cache keyed by geometry (spark/join.py:100), so the wrapper
-only needs to bind the predicate kernels to a fixed left geometry. Same
+state was built by ``shapely.prepare``; in this engine preparation is the
+RaggedPolygonLayer a point join builds over its regions (geo/kernels.py),
+so the wrapper only needs to bind the predicate kernels to a fixed left geometry. Same
 method surface, same ``context``/``prepared`` attributes, same
 unpicklable contract.
 """

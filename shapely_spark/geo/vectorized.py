@@ -4,7 +4,7 @@ reference: shapely/vectorized/__init__.py — ``contains(geometry, x, y)``
 and ``touches(geometry, x, y)`` evaluate one geometry against arrays of
 point coordinates, emitting the reference's DeprecationWarning that
 points at the 2.0 ``contains_xy``/``intersects_xy`` replacements. The
-polygonal path rides the same PreparedPolygons classifier the engine's
+polygonal path rides the same RaggedPolygonLayer classifier the engine's
 spatial join uses (kernels.py): one ring extraction per call, one
 vectorized crossing-parity pass per batch. Non-polygonal geometries
 (points/lines) fall back to the scalar DE-9IM kernels per point — the
@@ -84,6 +84,5 @@ def touches(geometry, x, y) -> np.ndarray:
     geom = _unwrap(geometry)
     x, y = _xy(x, y)
     if geom.type_id in _POLYGONAL:
-        prep = K.PreparedPolygons([geom])
-        return prep.test(0, x.ravel(), y.ravel(), "touches").reshape(x.shape)
+        return K._classify_xy(geom, x, y) == K.BOUNDARY
     return _pointwise(geom, x, y, K.touches)

@@ -24,6 +24,7 @@ from ..geo import kernels as K
 from ..geo.geom import point as make_point
 from ..geo.wkb import from_wkb, to_wkb
 from ..geo.wkt import from_wkt, to_wkt
+from .join import _classify_by_wkb
 
 
 _CACHE: dict | None = None
@@ -110,14 +111,6 @@ def _build() -> dict:
         return pred
 
 
-    @F.pandas_udf("string")
-    def st_relate(a: pd.Series, b: pd.Series) -> pd.Series:
-        """reference: shapely/predicates.py:1194 — full DE-9IM matrix."""
-        return pd.Series([
-            None if (g is None or h is None) else K.relate(g, h)
-            for g, h in zip(_geoms(a), _geoms(b))
-        ])
-
     @F.pandas_udf("long")
     def st_cell(lat: pd.Series, lon: pd.Series, res: pd.Series) -> pd.Series:
         """Grid cell id at resolution `res` (engine-owned index; mirrors
@@ -141,13 +134,6 @@ def _build() -> dict:
                         int(parent_res.iloc[0])),
             dtype="int64")
 
-    @F.pandas_udf("boolean")
-    def st_dwithin(a: pd.Series, b: pd.Series, dist: pd.Series) -> pd.Series:
-        """reference: shapely/predicates.py:1269 dwithin."""
-        return pd.Series(
-            [K.dwithin(g, h, float(d))
-             for g, h, d in zip(_geoms(a), _geoms(b), dist)], dtype="bool")
-
     st_intersects = _binary_pred(K.intersects)
     st_contains = _binary_pred(K.contains)
     st_within = _binary_pred(K.within)
@@ -161,22 +147,11 @@ def _build() -> dict:
 
     @F.pandas_udf("boolean")
     def st_contains_xy(wkb: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        """reference: shapely/predicates.py:1311 — prepared point fast path,
-        vectorized over the batch grouped by distinct polygon."""
-        out = np.zeros(len(wkb), dtype=bool)
-        xs = x.to_numpy(np.float64)
-        ys = y.to_numpy(np.float64)
-        codes, uniques = pd.factorize(wkb)
-        for u_idx, u in enumerate(uniques):
-            if u is None:
-                continue
-            sel = codes == u_idx
-            g = from_wkb(bytes(u), on_invalid="ignore")
-            if g is None:
-                continue
-            prep = K.PreparedPolygons([g])
-            out[sel] = prep.classify(0, xs[sel], ys[sel]) == K.INTERIOR
-        return pd.Series(out)
+        """reference: shapely/predicates.py:1311 — prepared point fast path:
+        the shuffle point join's refine, one RaggedPolygonLayer over the
+        batch's unique WKBs."""
+        cls = _classify_by_wkb(wkb, x.to_numpy(np.float64), y.to_numpy(np.float64))
+        return pd.Series(cls == K.INTERIOR)
 
 
     @F.pandas_udf("boolean")
@@ -511,8 +486,6 @@ def _build() -> dict:
         "st_m": st_m,
         "st_numgeometries": st_numgeometries,
         "st_geometryn": st_geometryn,
-        "st_relate": st_relate,
-        "st_dwithin": st_dwithin,
         "st_hausdorffdistance": st_hausdorffdistance,
         "st_lineinterpolatepoint": st_lineinterpolatepoint,
         "st_linelocatepoint": st_linelocatepoint,

@@ -12,18 +12,20 @@ The Spark plan (SURVEY.md §3.3):
                                                                  broadcast or shuffle]
   full cells ──▶ emit directly (cell entirely inside the polygon —
                  the broadcast-side analog of prepared-containment)
-  partial cells ──▶ pandas-UDF refine: exact point-in-polygon kernel;
-                    region geometries ride an sc.broadcast dict and are
-                    parsed + prepared ONCE per executor (the Spark analog of
-                    GEOS prepared geometries, shapely/creation.py:735) —
-                    the join itself moves only (region_id, cell_id, full)
+  partial cells ──▶ pandas-UDF refine: exact point-in-polygon kernel
+                    over a RaggedPolygonLayer (the Spark analog of GEOS
+                    prepared geometries, shapely/creation.py:735), built
+                    ONCE driver-side and shipped as one sc.broadcast — the
+                    join itself moves only (region_id, cell_id, full)
                     ints, never geometry bytes.
 
 At scale: the covers table is tiny relative to pages (|regions| × avg-cover),
 so Catalyst picks a broadcast hash join — the pages side is never shuffled.
 For region layers too big to broadcast, pass broadcast=False: the covers
 table (with WKB inlined for partial cells) shuffles both sides on cell_id
-with AQE skew splitting; the refine caches prepared polygons by WKB bytes.
+with AQE skew splitting; the refine builds one RaggedPolygonLayer per Arrow
+batch over the batch's unique WKBs. Either way region ids may be any int64;
+a region with a NULL id or NULL geometry is skipped.
 """
 
 from __future__ import annotations
@@ -58,7 +60,8 @@ JOIN_RES = DEFAULT_RES + 2
 def covers_df(regions: DataFrame, res: int = DEFAULT_RES, with_wkb: bool = False) -> DataFrame:
     """regions(region_id, wkb) → exploded cell cover. Distributed fan-out
     (mapInPandas). with_wkb=True inlines the region WKB on partial cells
-    (shuffle-join mode, where no driver broadcast of geometry exists)."""
+    (shuffle-join mode, where no driver broadcast of geometry exists).
+    Rows with a NULL region_id or NULL/empty geometry emit no cells."""
     schema = "region_id long, cell_id long, full boolean" + (
         ", wkb binary" if with_wkb else ""
     )
@@ -88,27 +91,41 @@ def covers_df(regions: DataFrame, res: int = DEFAULT_RES, with_wkb: bool = False
                 data["wkb"] = pd.Series(wkbs, dtype="object")
             yield pd.DataFrame(data)
 
-    return regions.select("region_id", "wkb").mapInPandas(gen, schema)
+    # NULL ids drop JVM-side, so region_id reaches pandas as exact int64
+    # (a NULL in the batch would turn the column into float64)
+    return (regions.select("region_id", "wkb")
+            .where(F.col("region_id").isNotNull())
+            .mapInPandas(gen, schema))
 
 
-# executor-local prepared-polygon cache (reference: prepared geometries,
-# shapely/creation.py:735 — build once, reuse across batches/tasks). Used by
-# the shuffle-join path, whose covers rows inline WKB; the broadcast path
-# ships a prebuilt RaggedPolygonLayer instead and needs no executor cache.
-_PREP_BY_WKB: dict[bytes, object] = {}
+_GEOM_BY_WKB: dict[bytes, object] = {}
 
 
-def _prepared_from_wkb(wkb: bytes):
-    prep = _PREP_BY_WKB.get(wkb)
-    if prep is None:
-        from ..geo.kernels import PreparedPolygons
+def _geom_from_wkb_cached(wkb: bytes):
+    """Executor-local parsed-geometry cache: a geometry that appears in
+    many candidate pairs (or across batches/tasks) is decoded once."""
+    g = _GEOM_BY_WKB.get(wkb)
+    if g is None:
         from ..geo.wkb import from_wkb
 
-        if len(_PREP_BY_WKB) > 4096:
-            _PREP_BY_WKB.clear()
-        prep = PreparedPolygons([from_wkb(wkb)])
-        _PREP_BY_WKB[wkb] = prep
-    return prep
+        if len(_GEOM_BY_WKB) > 65536:
+            _GEOM_BY_WKB.clear()
+        g = from_wkb(wkb, on_invalid="ignore")
+        _GEOM_BY_WKB[wkb] = g
+    return g
+
+
+def _classify_by_wkb(wkb: pd.Series, x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """0/1/2 class of point i vs the polygon whose WKB is wkb[i]: one
+    RaggedPolygonLayer over the batch's unique WKBs (each parsed through
+    the executor cache), keyed by the factorize codes. A NULL WKB gets
+    code -1, which the layer does not hold, so it classifies EXTERIOR."""
+    from ..geo.kernels import RaggedPolygonLayer
+
+    codes, uniq = pd.factorize(wkb)
+    layer = RaggedPolygonLayer(
+        {i: _geom_from_wkb_cached(bytes(w)) for i, w in enumerate(uniq)})
+    return layer.classify_many(codes, x, y)
 
 
 def _group_ranges(codes: np.ndarray):
@@ -158,80 +175,62 @@ def spatial_join(
     if drop_cell:
         points = points.withColumn(cell_col_name, cell_col(F.col(lat_c), F.col(lon_c), res))
 
+    covers = covers_df(regions, res, with_wkb=not broadcast)
+    cover_cols = [
+        F.col("region_id"),
+        F.col("cell_id").alias("__cover_cell"),
+        F.col("full").alias("__full"),
+    ]
+    # the two modes differ only in how the refine resolves a key to a
+    # RaggedPolygonLayer row: broadcast keys by region_id into one layer,
+    # shuffle keys by the WKB on the partial cover rows into a per-batch
+    # layer over the batch's unique WKBs
     if broadcast:
         # the whole region layer rides ONE torrent broadcast as a prebuilt
         # ragged edge structure (flat arrays + per-region offsets), built
         # driver-side from the rows we must collect anyway: workers pay zero
         # per-region construction, and the refine is one vectorized ray-cast
         # over every (candidate, edge) pair — no per-region Python dispatch.
-        # (The old per-(bc,rid) prepared cache cost ~20 µs of dispatch per
-        # distinct region per Arrow batch: fine at 1k regions where groups
-        # are large, 100× the kernel cost at a 100k-region layer where each
-        # batch holds ~1 candidate per region.)
         from ..geo.kernels import RaggedPolygonLayer
         from ..geo.wkb import from_wkb as _from_wkb
 
         geo_rows = regions.select("region_id", "wkb").collect()
         layer = RaggedPolygonLayer({
             int(r.region_id): _from_wkb(bytes(r.wkb))
-            for r in geo_rows if r.wkb is not None and r.region_id >= 0
+            for r in geo_rows if r.region_id is not None and r.wkb is not None
         })
         bc = points.sparkSession.sparkContext.broadcast(layer)
-        covers = F.broadcast(
-            covers_df(regions, res).select(
-                F.col("region_id"),
-                F.col("cell_id").alias("__cover_cell"),
-                F.col("full").alias("__full"),
-            )
-        )
+        covers = F.broadcast(covers.select(*cover_cols))
+        key = F.col("region_id")
 
-        @F.pandas_udf("boolean")
-        def refine(rid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-            # full-cell rows arrive with rid NULL-masked JVM-side (see the
-            # single-plan filter below): first move is one vectorized null
-            # mask, so bypass rows cost no kernel work and no dispatch.
-            mask = rid.notna().to_numpy()
-            out = np.zeros(len(rid), dtype=bool)
-            if mask.any():
-                cls = bc.value.classify_many(
-                    rid[mask].to_numpy(dtype=np.int64),
-                    lon[mask].to_numpy(dtype=np.float64),
-                    lat[mask].to_numpy(dtype=np.float64),
-                )
-                out[mask] = _classify_to_bool(cls, predicate)
-            return pd.Series(out)
-
-        j = points.join(covers, points[cell_col_name] == covers["__cover_cell"], "inner")
-        refine_call = refine(
-            F.when(~F.col("__full"), F.col("region_id")), F.col(lon_c), F.col(lat_c))
+        def classify(k: pd.Series, x: np.ndarray, y: np.ndarray) -> np.ndarray:
+            return bc.value.classify_many(k.to_numpy(dtype=np.int64), x, y)
     else:
-        covers = covers_df(regions, res, with_wkb=True).select(
-            F.col("region_id"),
-            F.col("cell_id").alias("__cover_cell"),
-            F.col("full").alias("__full"),
-            F.col("wkb").alias("__wkb"),
-        )
+        covers = covers.select(*cover_cols, F.col("wkb").alias("__wkb"))
+        key = F.col("__wkb")
+        classify = _classify_by_wkb
 
-        @F.pandas_udf("boolean")
-        def refine_wkb(wkb: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-            x = lon.to_numpy(dtype=np.float64)
-            y = lat.to_numpy(dtype=np.float64)
-            out = np.zeros(len(wkb), dtype=bool)
-            codes, uniques = pd.factorize(wkb)
-            for u_idx, idx in _group_ranges(codes):
-                if u_idx < 0:  # factorize maps None/NaN to code -1
-                    continue
-                u_wkb = uniques[u_idx]
-                if u_wkb is None:
-                    continue
-                prep = _prepared_from_wkb(bytes(u_wkb))
-                out[idx] = _classify_to_bool(prep.classify(0, x[idx], y[idx]), predicate)
-            return pd.Series(out)
+    @F.pandas_udf("boolean")
+    def refine(key: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+        # full-cell rows arrive with lon/lat NULL-masked JVM-side (see the
+        # single-plan filter below): first move is one vectorized null
+        # mask, so bypass rows cost no kernel work and no dispatch. The key
+        # itself is never masked, so a region_id arrives as exact int64.
+        live = lon.notna().to_numpy()
+        out = np.zeros(len(lon), dtype=bool)
+        if live.any():
+            cls = classify(
+                key[live],
+                lon[live].to_numpy(dtype=np.float64),
+                lat[live].to_numpy(dtype=np.float64),
+            )
+            out[live] = _classify_to_bool(cls, predicate)
+        return pd.Series(out)
 
-        j = points.join(covers, points[cell_col_name] == covers["__cover_cell"], "inner")
-        # covers_df inlines wkb=None on full cells, so __wkb is already the
-        # NULL-mask: refine_wkb's factorize maps it to code -1 → False.
-        refine_call = refine_wkb(F.col("__wkb"), F.col(lon_c), F.col(lat_c))
+    j = points.join(covers, points[cell_col_name] == covers["__cover_cell"], "inner")
+    partial = ~F.col("__full")
+    refine_call = refine(
+        key, F.when(partial, F.col(lon_c)), F.when(partial, F.col(lat_c)))
 
     # ONE plan, ONE pages scan. An earlier two-branch full/partial Union
     # re-ran the pages scan + geotag extraction once PER BRANCH (the
@@ -255,25 +254,8 @@ def spatial_join(
     if predicate in _FULL_OK:
         cond = F.col("__full") | refine_call
     else:  # touches: full-interior cells can never touch the boundary
-        cond = ~F.col("__full") & refine_call
+        cond = partial & refine_call
     return j.where(cond).select(*out_cols)
-
-
-_GEOM_BY_WKB: dict[bytes, object] = {}
-
-
-def _geom_from_wkb_cached(wkb: bytes):
-    """Executor-local parsed-geometry cache: a geometry that appears in
-    many candidate pairs (or across batches/tasks) is decoded once."""
-    g = _GEOM_BY_WKB.get(wkb)
-    if g is None:
-        from ..geo.wkb import from_wkb
-
-        if len(_GEOM_BY_WKB) > 65536:
-            _GEOM_BY_WKB.clear()
-        g = from_wkb(wkb, on_invalid="ignore")
-        _GEOM_BY_WKB[wkb] = g
-    return g
 
 
 def _pair_refine_batch(
@@ -368,6 +350,7 @@ def spatial_join_geom(
     Semantics: STRtree.query(geoms, predicate) pair semantics generalized
     to arbitrary geometry on BOTH sides (shapely/strtree.py:229-266) —
     point-side joins should use spatial_join (cheaper: no left geometry).
+    A row with a NULL id or NULL geometry, on either side, is skipped.
 
     Plan: both sides explode to their bbox cell covers at `res`; equi-join
     on cell. A pair that shares k cells would appear k times, so each
@@ -433,7 +416,10 @@ def spatial_join_geom(
                         [bytes(wkbs.iloc[k]) for k in src], dtype="object")
                 yield pd.DataFrame(data)
 
-        return df.select(id_col, "wkb").mapInPandas(gen, schema)
+        # NULL ids drop JVM-side (as in covers_df): the id column then
+        # reaches pandas as exact int64, never a NaN-cast sentinel
+        return (df.select(id_col, "wkb").where(F.col(id_col).isNotNull())
+                .mapInPandas(gen, schema))
 
     lcov = covers(left, left_id, with_wkb=True).select(
         F.col(left_id), F.col("cell_id").alias("__lc"),
@@ -456,7 +442,8 @@ def spatial_join_geom(
         # geometry dict rides a torrent broadcast; the join moves only ints
         geo_rows = right.select(right_id, "wkb").collect()
         bc = left.sparkSession.sparkContext.broadcast(
-            {int(r[0]): bytes(r[1]) for r in geo_rows if r[1] is not None}
+            {int(r[0]): bytes(r[1]) for r in geo_rows
+             if r[0] is not None and r[1] is not None}
         )
         rcov = F.broadcast(rcov.select(*rcols))
         rkey = F.col(right_id)

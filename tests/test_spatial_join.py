@@ -102,6 +102,65 @@ def test_shuffle_mode_same_result(spark, pages, regions):
     assert {tuple(r) for r in a.collect()} == {tuple(r) for r in b.collect()}
 
 
+def test_spatial_join_arbitrary_int64_region_ids(spark, pages, regions):
+    """Region ids are any int64: remapped to negative, sparse and >2^40
+    (up to 2^62) values, both spatial_join modes return the dense-id
+    pairs, mapped back."""
+    def new_id(rid):  # negative and sparse; every third id above 2^40
+        return (rid - 30) * 1_000_003 + (
+            2**62 if rid % 6 == 3 else 2**41 if rid % 3 == 0 else 0)
+
+    remap = {rid: new_id(rid) for rid, _, _, _ in regions}
+    assert len(set(remap.values())) == len(remap)
+    back = {v: k for k, v in remap.items()}
+    dense = regions_df(spark, regions)
+    remapped = regions_df(spark, [(remap[r], n, g, k) for r, n, g, k in regions])
+    for broadcast in (True, False):
+        want = {tuple(r) for r in spatial_join(
+            pages, dense, res=RES, broadcast=broadcast)
+            .select("url", "region_id").collect()}
+        got = {(r.url, back[r.region_id]) for r in spatial_join(
+            pages, remapped, res=RES, broadcast=broadcast)
+            .select("url", "region_id").collect()}
+        assert got == want and len(want) > 0, broadcast
+
+
+def test_null_ids_are_skipped(spark, pages, regions):
+    """A row whose id is NULL is skipped like a NULL geometry: in both
+    joins and both modes the result equals the join without those rows."""
+    import pandas as pd
+
+    from shapely_spark.geo.wkb import to_wkb
+    from shapely_spark.spark.join import spatial_join_geom
+
+    def frame(rows, id_col):
+        return spark.createDataFrame(
+            pd.DataFrame({id_col: pd.Series([r[0] for r in rows], dtype="Int64"),
+                          "wkb": [to_wkb(r[1]) for r in rows]}),
+            f"{id_col} long, wkb binary")
+
+    rows = [(rid, g) for rid, _, g, _ in regions]
+    with_null = frame([(None if i % 4 == 0 else rid, g)
+                       for i, (rid, g) in enumerate(rows)], "region_id")
+    without = frame([(rid, g) for i, (rid, g) in enumerate(rows) if i % 4], "region_id")
+    lefts = frame([(None if i % 5 == 0 else 1000 + i, g)
+                   for i, (_, g) in enumerate(rows) if not g.is_empty], "left_id")
+    lefts_kept = lefts.where(F.col("left_id").isNotNull())
+    for broadcast in (True, False):
+        got = {tuple(r) for r in spatial_join(
+            pages, with_null, res=RES, broadcast=broadcast)
+            .select("url", "region_id").collect()}
+        want = {tuple(r) for r in spatial_join(
+            pages, without, res=RES, broadcast=broadcast)
+            .select("url", "region_id").collect()}
+        assert got == want and len(want) > 0, broadcast
+        got = set(map(tuple, spatial_join_geom(
+            lefts, with_null, broadcast=broadcast).collect()))
+        want = set(map(tuple, spatial_join_geom(
+            lefts_kept, without, broadcast=broadcast).collect()))
+        assert got == want and len(want) > 0, broadcast
+
+
 def test_spatial_join_geom_matches_bruteforce(spark):
     """Geometry×geometry join vs an O(n²) scalar-kernel oracle, in both
     broadcast modes. Lefts: irregular n-gons, plus points and segments
@@ -387,24 +446,41 @@ def test_spatial_join_geom_mixed_rects_and_ngons(spark):
 
 
 def test_ragged_layer_matches_prepared_classify():
-    """RaggedPolygonLayer.classify_many (the broadcast-join refine kernel)
-    must be bit-identical to per-region PreparedPolygons.classify over the
-    full region zoo — interior/boundary/exterior, exact corner and edge
-    hits, empties, holed and multi polygons, both layer layouts."""
-    from shapely_spark.geo.kernels import PreparedPolygons, RaggedPolygonLayer
+    """RaggedPolygonLayer.classify_many (the point-join refine kernel) must
+    be bit-identical to points_in_rings_class over each region's rings —
+    the classifier the layer is built on — over the full region zoo:
+    interior/boundary/exterior, exact corner and edge hits, empties, holed
+    and multi polygons, both layer layouts, and the same layer keyed by
+    negative, sparse and >2^62 ids (unknown ids classify exterior)."""
+    from shapely_spark.geo.geom import GEOMETRYCOLLECTION, MULTIPOLYGON, POLYGON
+    from shapely_spark.geo.kernels import (
+        RaggedPolygonLayer, bounds, points_in_rings_class)
 
-    for layout in ("hotspot", "uniform"):
-        regions = synth_regions(600, seed=7, layout=layout)
+    def rings_of(g):
+        if g.is_empty:
+            return []
+        polys = [g] if g.type_id == POLYGON else (
+            [p for p in g.parts or [] if p.type_id == POLYGON]
+            if g.type_id in (MULTIPOLYGON, GEOMETRYCOLLECTION) else [])
+        return [np.asarray(r)[:, :2] for p in polys for r in p.rings]
+
+    def remap(r):  # negative, sparse and huge ids, all distinct
+        return (r - 300) * 1_000_003 + (2**62 if r % 3 == 0 else 0)
+
+    for layout in ("hotspot", "uniform", "sparse"):
+        regions = synth_regions(600, seed=7,
+                                layout="hotspot" if layout == "sparse" else layout)
         geoms = {rid: g for rid, _, g, _ in regions}
-        layer = RaggedPolygonLayer(geoms)
+        key = remap if layout == "sparse" else (lambda r: r)
+        layer = RaggedPolygonLayer({key(r): g for r, g in geoms.items()})
         rng = np.random.RandomState(0)
         rids = rng.randint(0, 600, 5000).astype(np.int64)
         px = np.zeros(len(rids))
         py = np.zeros(len(rids))
         for i, r in enumerate(rids):
-            bb = layer.bbox[r]
-            if np.isnan(bb[0]):
+            if geoms[r].is_empty:
                 continue
+            bb = bounds(geoms[r])
             u = rng.uniform()
             if u < 0.1:  # exact corner → boundary for boxes
                 px[i], py[i] = bb[0], bb[1]
@@ -413,14 +489,18 @@ def test_ragged_layer_matches_prepared_classify():
             else:
                 px[i] = rng.uniform(bb[0] - 0.2, bb[2] + 0.2)
                 py[i] = rng.uniform(bb[1] - 0.2, bb[3] + 0.2)
-        got = layer.classify_many(rids, px, py)
+        ids = np.array([key(int(r)) for r in rids], dtype=np.int64)
+        got = layer.classify_many(ids, px, py)
         exp = np.zeros(len(rids), dtype=np.int8)
         for r in np.unique(rids):
             m = rids == r
-            exp[m] = PreparedPolygons([geoms[r]]).classify(0, px[m], py[m])
-        assert (got == exp).all()
+            exp[m] = points_in_rings_class(px[m], py[m], rings_of(geoms[r]))
+        assert (got == exp).all(), layout
         # all three classes must actually occur for the test to mean anything
         assert set(np.unique(got)) == {0, 1, 2}
+        # an id the layer does not hold is exterior, never another region
+        missing = ids + (1 if layout == "sparse" else 600)
+        assert not layer.classify_many(missing, px, py).any()
 
 
 def test_group_intersects_matches_scalar_fuzz():
